@@ -3,10 +3,10 @@ on Spark (ref ``docs/notebooks/walkthrough.ipynb``)::
 
     python examples/garnet_workflow.py [analyses.csv]
 
-Loads an analysis table (defaults to the reference's bundled
-``minerals.csv`` fixture layout), selects the garnets, converts to
-12-oxygen APFU with Droop Fe³⁺, allocates sites, computes Locock
-end-members, and prints per-sample means — every step a lazy Spark
+Loads an analysis table (defaults to the package's bundled ``minerals``
+dataset, the reference's ``minerals.csv`` fixture), selects the garnets,
+converts to 12-oxygen APFU with Droop Fe³⁺, allocates sites, computes
+Locock end-members, and prints per-sample means — every step a lazy Spark
 plan; nothing executes until the final ``show``.
 """
 
@@ -19,13 +19,11 @@ from pyspark.sql import SparkSession
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from petropandas_spark import minerals  # noqa: E402
+from petropandas_spark import datasets, minerals  # noqa: E402
 from petropandas_spark.io import read_analyses  # noqa: E402
 
 
 def main() -> None:
-    path = sys.argv[1] if len(sys.argv) > 1 else (
-        "/root/reference/src/petropandas/data/minerals.csv")
     spark = (
         SparkSession.builder.master("local[*]")
         .appName("garnet-workflow")
@@ -34,7 +32,10 @@ def main() -> None:
     )
     spark.sparkContext.setLogLevel("ERROR")
 
-    pf = read_analyses(spark, path)                      # S1 + P1 clean
+    if len(sys.argv) > 1:
+        pf = read_analyses(spark, sys.argv[1])           # S1 + P1 clean
+    else:
+        pf = datasets.load_petro(spark, "minerals")      # bundled, P1 clean
     grt = pf.select_rows("Garnet", on="Mineral")         # P5 row select
     em = grt.end_members(minerals.GARNET)                # U5+V4+M3+E1
     em.df.select("Analysis_ID", "Prp", "Alm", "Sps", "Grs").show(5)

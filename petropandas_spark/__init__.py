@@ -4,11 +4,12 @@ data-processing capabilities of ondrolexa/petropandas (reference read-only at
 
 Architecture (SURVEY.md §7): the scalar layer is *dual-dialect SQL
 generation* (``sqlgen.Plan``) — every operator is a chain of projection
-stages whose expressions are valid in both Spark SQL and DuckDB.  Spark
-executes them via ``selectExpr`` (ordinary Catalyst expressions:
-whole-stage-codegen'd, constant-folded, collapsed, pushed down); the same
-builder renders the DuckDB oracle SQL for the driver's correctness gate,
-so both engines evaluate the identical IEEE-754 expression tree.
+stages whose expressions are valid in both Spark SQL and DuckDB.  One
+renderer nests the stages as sub-selects; Spark runs that SQL through
+``spark.sql`` (ordinary Catalyst expressions: whole-stage-codegen'd,
+constant-folded, collapsed, pushed down) and the DuckDB oracle of the
+correctness gate runs the same text in its dialect, so both engines
+evaluate the identical IEEE-754 expression tree.
 
 Layers:
   core         driver-side chemistry (column-name → constants)

@@ -8,9 +8,10 @@ per-row ``petro_total`` becomes a real hidden column ``__petro_total``
 (SURVEY.md §1.2).
 
 All transformations are *lazy*: methods build a ``sqlgen.Plan`` from the
-current schema (driver-side only) and apply it as chained ``selectExpr``
-projections — Catalyst collapses / constant-folds / codegens the chain;
-nothing executes until an action.
+current schema (driver-side only) and apply it as nested SQL
+projections, one ``spark.sql`` query per codegen segment — Catalyst
+collapses / constant-folds / codegens the chain; nothing executes until an
+action.
 """
 
 from __future__ import annotations

@@ -913,7 +913,10 @@ def pair_shingle_stats(df: DataFrame, pairs: DataFrame,
     # the broadcast build and array_intersect all work on 8-byte longs
     # instead of 3-char strings (interleaved A/B min-of-4 at sf0.1:
     # pair stats 4.50 → 3.59 s, stats rows identical).  Wider shingles
-    # keep the exact string path.
+    # keep the exact string path.  A NULL-text doc's NULL shingle stays
+    # NULL (collect_set drops it, as on the string path) — the length
+    # gates alone would pack it to 0, the '' shingle, and verify two
+    # NULL-text docs as exact duplicates.
     if shingle <= 3:
         slots = " + ".join(
             f"shiftleft(IF(length(sh) >= {i + 1}, "
@@ -921,7 +924,8 @@ def pair_shingle_stats(df: DataFrame, pairs: DataFrame,
             f"{21 * (shingle - 1 - i)})"
             for i in range(shingle)
         )
-        exploded = exploded.select(id_col, F.expr(slots).alias("sh"))
+        exploded = exploded.select(
+            id_col, F.when(F.col("sh").isNotNull(), F.expr(slots)).alias("sh"))
     sh = exploded.groupBy(id_col).agg(
         F.collect_set("sh").alias("shingles"))
     # join strategy deliberately un-hinted: the shingle-set side is

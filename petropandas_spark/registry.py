@@ -4,9 +4,10 @@ Three query families, all returning ``(spark_fn, oracle_sql)`` pairs:
 
 1. **Domain plans** (petropandas operators, SURVEY.md §2): a dual-dialect
    ``sqlgen.Plan`` over a deterministic pseudo-mineral projection of the
-   TPC-H-ish testdata.  Spark executes chained ``selectExpr``; the oracle is
-   the same plan rendered as nested DuckDB sub-selects — bitwise-identical
-   IEEE-754 results by construction.
+   TPC-H-ish testdata.  Spark executes the plan as nested sub-selects, one
+   ``spark.sql`` query per codegen segment; the oracle is the same plan
+   rendered in the DuckDB dialect — bitwise-identical IEEE-754 results by
+   construction.
 2. **Relational SQL** (joins/aggs/windows/top-k): one SQL text valid in both
    dialects, run via ``spark.sql`` over temp views.  Aggregates use the
    decimal-sum pattern — ``CAST(SUM(CAST(x AS DECIMAL(28,10))) AS DOUBLE)``

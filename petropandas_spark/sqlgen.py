@@ -1,13 +1,14 @@
 """Dual-dialect SQL expression generation.
 
 The engine's scalar layer is built from SQL expression strings that are
-valid in BOTH Spark SQL and DuckDB.  The Spark engine executes them with
-``DataFrame.selectExpr`` (they become ordinary Catalyst expressions —
-whole-stage-codegen'd, constant-folded, collapsed across stages by
-``CollapseProject``), and the *same* builder emits the DuckDB oracle SQL
-for the driver's correctness gate.  Because both engines then evaluate
-the identical IEEE-754 expression tree, per-row results are bitwise
-identical — no tolerance games.
+valid in BOTH Spark SQL and DuckDB.  One renderer nests a plan's stages
+as sub-selects: the Spark engine runs that text through ``spark.sql``
+(they become ordinary Catalyst expressions — whole-stage-codegen'd,
+constant-folded, collapsed across stages by ``CollapseProject``), and the
+DuckDB oracle SQL of the correctness gate is the *same* text in the other
+dialect.  Because both engines then evaluate the identical
+IEEE-754 expression tree, per-row results are bitwise identical — no
+tolerance games.
 
 Rules for portability (verified against Spark 4.1 / DuckDB 1.0):
   * float literals must carry an exponent (``0.01`` is DECIMAL in both
@@ -20,6 +21,7 @@ Rules for portability (verified against Spark 4.1 / DuckDB 1.0):
 from __future__ import annotations
 
 import math
+import uuid
 from dataclasses import dataclass, field
 
 
@@ -225,11 +227,12 @@ class Stage:
 
 @dataclass
 class Plan:
-    """A chain of stages over a named base relation.
+    """A chain of stages over a named base relation, rendered as nested
+    sub-selects by one renderer for both engines.
 
-    * Spark: ``apply(df)`` → chained ``selectExpr`` (Catalyst collapses
-      the chain into a single projection).
-    * DuckDB: ``to_sql(base)`` → nested sub-selects for the oracle.
+    * Spark: ``apply(df)`` → one ``spark.sql`` query per codegen segment
+      (Catalyst collapses each query into a single projection).
+    * DuckDB: ``to_sql(base)`` → the whole plan as one query for the oracle.
     """
 
     stages: list[Stage] = field(default_factory=list)
@@ -247,42 +250,69 @@ class Plan:
     def _render_pred(self, pred, dialect: Dialect) -> str:
         return pred if isinstance(pred, str) else pred(dialect.quote)
 
-    def apply(self, df):
-        """Run the plan on a Spark DataFrame.
+    def _sql(self, base: str, dialect: Dialect, stages) -> str:
+        """Nest ``(index, rendered stage)`` pairs as sub-selects over
+        *base*; a stage's filters wrap its own output, so they see the
+        stage's aliases."""
+        q = dialect.quote
+        sql = base
+        for i, rendered in stages:
+            select = ", ".join(f"{e} AS {q(a)}" for a, e in rendered)
+            sql = f"SELECT {select} FROM ({sql})"
+            preds = [self._render_pred(p, dialect) for p in self.filters.get(i, [])]
+            if preds:
+                sql = f"SELECT * FROM ({sql}) WHERE {' AND '.join(preds)}"
+        return sql
 
-        Catalyst fuses the selectExpr chain into one whole-stage-codegen
-        span; when the accumulated expression text says the span's
-        generated method would cross HotSpot's 8000-bytecode JIT ceiling
-        (see CODEGEN_SPLIT_TEXT), a codegen barrier is inserted BEFORE
-        the stage that would cross, so every span stays JIT-compilable
-        on a stock JVM — no -XX:-DontCompileHugeMethods dependency."""
+    def _segments(self) -> list[list[tuple[int, list[tuple[str, str]]]]]:
+        """Spark-rendered stages grouped into whole-stage-codegen
+        segments: a new segment starts BEFORE the stage whose expression
+        text would carry the accumulated span past CODEGEN_SPLIT_TEXT."""
         q = SPARK.quote
-        acc = 0
+        segments, acc = [], 0
         for i, st in enumerate(self.stages):
             rendered = st.render(SPARK)
             # passthrough columns ("x AS x") fuse to nothing; only real
             # expression text contributes generated code
             weight = sum(len(e) for a, e in rendered if e != q(a))
-            if acc and acc + weight > CODEGEN_SPLIT_TEXT:
-                df = codegen_barrier(df)
+            if not segments or (acc and acc + weight > CODEGEN_SPLIT_TEXT):
+                segments.append([])
                 acc = 0
             acc += weight
-            df = df.selectExpr(*[f"{e} AS {q(a)}" for a, e in rendered])
-            for pred in self.filters.get(i, []):
-                df = df.filter(self._render_pred(pred, SPARK))
+            segments[-1].append((i, rendered))
+        return segments
+
+    def apply(self, df):
+        """Run the plan on a Spark DataFrame.
+
+        Each codegen segment is one nested SELECT over a temp view of
+        the input, parsed and analyzed by a single ``spark.sql`` call;
+        Catalyst fuses it into one whole-stage-codegen span.  A codegen
+        barrier separates consecutive segments, so every span stays
+        under HotSpot's 8000-bytecode JIT ceiling on a stock JVM (see
+        CODEGEN_SPLIT_TEXT) — no -XX:-DontCompileHugeMethods dependency.
+
+        The view is dropped from the session catalog directly:
+        ``spark.catalog.dropTempView`` (and ``spark.sql(..., df=...)``,
+        which drops through it) also uncaches the view's plan, i.e. a
+        cached input frame."""
+        spark = df.sparkSession
+        catalog = spark._jsparkSession.sessionState().catalog()
+        for k, segment in enumerate(self._segments()):
+            if k:
+                df = codegen_barrier(df)
+            view = f"__petro_plan_{uuid.uuid4().hex}"
+            df.createTempView(view)
+            try:
+                df = spark.sql(self._sql(SPARK.quote(view), SPARK, segment))
+            finally:
+                catalog.dropTempView(view)
         return df
 
     def to_sql(self, base: str, dialect: Dialect = DUCKDB) -> str:
         """Render the full plan as one nested SELECT over *base*."""
-        q = dialect.quote
-        sql = base
-        for i, st in enumerate(self.stages):
-            rendered = st.render(dialect)
-            select = ", ".join(f"{e} AS {q(a)}" for a, e in rendered)
-            preds = [self._render_pred(p, dialect) for p in self.filters.get(i, [])]
-            where = f" WHERE {' AND '.join(preds)}" if preds else ""
-            sql = f"SELECT {select} FROM ({sql}){where}"
-        return sql
+        return self._sql(base, dialect, [
+            (i, st.render(dialect)) for i, st in enumerate(self.stages)])
 
 
 class Ctx:

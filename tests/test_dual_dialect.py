@@ -1,7 +1,7 @@
 """The engine's load-bearing property: a ``sqlgen.Plan`` evaluates to
-*identical* results in Spark (``selectExpr`` chain) and DuckDB (nested
-sub-selects) — this is what makes the driver's duckdb-oracle correctness
-gate pass by construction."""
+*identical* results in Spark and DuckDB — both run the same nested
+sub-selects, rendered per dialect — and this is what makes the
+duckdb-oracle correctness gate pass by construction."""
 
 import duckdb
 import pandas as pd
@@ -69,6 +69,22 @@ def test_check_stoichiometry_identical(spark, garnet_pdf):
         minerals.GARNET, carry=["id"],
     )
     assert_identical(*run_both(spark, garnet_pdf, plan))
+
+
+def test_filter_sees_stage_output_identical(spark):
+    """A filter applies AFTER its stage in both engines: here the stage
+    redefines ``x``, and the predicate must see the new value, not the
+    input column of the same name."""
+    from petropandas_spark.sqlgen import Ctx
+
+    plan = Plan()
+    Ctx(plan, ["x"]).let([("x", lambda q: f"{q('x')} * 2e0")])
+    plan.add_filter(lambda q: f"{q('x')} > 4e0")
+    pdf = pd.DataFrame({"x": [0.0, 1.0, 2.0, 3.0, 4.0]})
+    sdf, ddf = run_both(spark, pdf, plan)
+    assert sorted(sdf["x"]) == [6.0, 8.0]
+    assert_identical(sdf.sort_values("x", ignore_index=True),
+                     ddf.sort_values("x", ignore_index=True))
 
 
 def test_span_dedup_unicode_dual_engine(spark):
